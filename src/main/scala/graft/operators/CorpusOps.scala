@@ -440,12 +440,13 @@ object FingerprintOverlap {
       maxBucketSize, hasher)
   }
 
-  /** [[candidatePairs]] over an ALREADY-EXPLODED (id, fingerprint) table
-    * — for callers whose fingerprint computation is cheaper as a
-    * top-level codegen'd projection over exploded positions than as an
-    * interpreted per-element array HOF (r13). Rows must be distinct per
-    * (id, fingerprint), exactly as [[candidatePairs]]' distinct arrays
-    * guarantee. */
+  /** [[candidatePairs]] over an ALREADY-EXPLODED (id, fingerprint) table:
+    * the [[Postings]] candidate shape on the fingerprint, one row per
+    * shared fingerprint, counted per pair. For callers whose fingerprint
+    * computation is cheaper as a top-level codegen'd projection over
+    * exploded positions than as an interpreted per-element array HOF.
+    * Rows must be distinct per (id, fingerprint), exactly as
+    * [[candidatePairs]]' distinct arrays guarantee. */
   def candidatePairsInverted(
       df: DataFrame,
       idField: String,
@@ -454,50 +455,14 @@ object FingerprintOverlap {
       maxBucketSize: Option[Int] = None,
       hasher: Column => Column = c => xxhash64(c)
   ): DataFrame = {
-    val inverted =
-      df.select(col(idField).as("__fo_id"), col(fpField).as("__fo_f"))
-    maxBucketSize match {
-      case Some(cap) =>
-        // POSTINGS shape (r13): one groupBy on the fingerprint builds
-        // each posting list, keeps the `cap` members ranked first by
-        // (salted hash, id) — the exact (hash, id) order the previous
-        // row_number window used — and emits the posting's ≤
-        // cap·(cap−1)/2 pairs in-row via
-        // [[graft.functions.functions.pair_combos]]. The window shuffle,
-        // the self-join (two more exchanges), and the persist/checkpoint
-        // bookkeeping they required all disappear; the per-pair shared
-        // count (and so the output) is identical. r14: the cap is a
-        // BOUNDED-HEAP aggregate ([[graft.functions.functions
-        // .collect_min_k]]) — same ascending order as the r13
-        // `array_sort(collect_list)` slice, but a hot fingerprint's
-        // buffer never exceeds cap and partial aggregation caps what
-        // each map partition ships.
-        inverted
-          .select(col("__fo_f"),
-            struct(
-              hasher(concat_ws("|", col("__fo_id"), col("__fo_f"))).as("h"),
-              col("__fo_id").as("id")).as("__fo_r"))
-          .groupBy(col("__fo_f"))
-          .agg(graft.functions.functions.collect_min_k(col("__fo_r"), cap)
-            .as("__fo_kept"))
-          .select(explode(graft.functions.functions.pair_combos(
-            transform(col("__fo_kept"), r => r.getField("id")))).as("__fo_p"))
-          .select(col("__fo_p").getField("id_a").as("id_a"),
-            col("__fo_p").getField("id_b").as("id_b"))
-          .groupBy(col("id_a"), col("id_b"))
-          .agg(count(lit(1)).as("shared"))
-          .filter(col("shared") >= minShared)
-      case None =>
-        inverted.as("a")
-          .join(
-            inverted.as("b"),
-            col("a.__fo_f") === col("b.__fo_f") &&
-              col("a.__fo_id") < col("b.__fo_id"))
-          .select(col("a.__fo_id").as("id_a"), col("b.__fo_id").as("id_b"))
-          .groupBy(col("id_a"), col("id_b"))
-          .agg(count(lit(1)).as("shared"))
-          .filter(col("shared") >= minShared)
-    }
+    // the cap's rank is salted with the fingerprint, so a hot document
+    // is not the one dropped from every posting
+    Postings.pairs(df, Seq(col(fpField)), col(idField),
+        Postings.keepFirst(maxBucketSize,
+          hasher(concat_ws("|", col(idField), col(fpField)))))
+      .groupBy(col("id_a"), col("id_b"))
+      .agg(count(lit(1)).as("shared"))
+      .filter(col("shared") >= minShared)
   }
 }
 

@@ -142,25 +142,6 @@ final case class MinHashSignature(
 
 object MinHashLSH {
 
-  /** Candidate pairs (idA < idB) from banding a minhash signature column.
-    * Linear explode → shuffle on (band, bandHash) → bucket-local join. */
-  /** `maxBucketSize`: the standard LSH skew guard for web-scale corpora.
-    * A degenerate band hash (boilerplate pages, empty docs) can put
-    * millions of ids in one (band, bh) bucket, turning the bucket-local
-    * self-join quadratic on the hot key. Oversized buckets are
-    * DOWN-SAMPLED to `cap` members BEFORE the join, ordered by a
-    * per-band deterministic hash — so join work is bounded at cap² per
-    * bucket, and because each band keeps a *different* subset, members
-    * of a hot exact-dup cluster (where every band bucket is oversized)
-    * still surface in some band's kept set with probability
-    * ≈ 1 − (1 − cap/n)^bands. Recall on such clusters is reduced, not
-    * preserved: with n ≫ cap·bands some members pair with nothing and
-    * the cluster can fragment; downstream connected-components re-links
-    * what does pair. None = exact banding (the oracle-parity default). */
-  /** `hasher`: band-key and down-sample-rank hash over a pre-concatenated
-    * string. Production default is codegen'd 8-byte xxhash64; oracle-
-    * parity queries pass md5 so DuckDB can replay the identical banding
-    * and down-sampling. */
   /** Probability that a pair with true Jaccard `s` becomes an LSH
     * candidate under (bands, rowsPerBand) banding — the MMDS §3.4.2
     * S-curve 1 − (1 − s^r)^b. Use to audit recall at a design point. */
@@ -211,6 +192,28 @@ object MinHashLSH {
     }
   }
 
+  /** Candidate pairs (idA < idB) from banding a minhash signature column:
+    * a linear explode to one (band, bandHash) key per band, then the
+    * [[Postings]] candidate shape on that key.
+    *
+    * `maxBucketSize`: the standard LSH skew guard for web-scale corpora.
+    * A degenerate band hash (boilerplate pages, empty docs) can put
+    * millions of ids in one (band, bh) bucket, turning the bucket-local
+    * self-join quadratic on the hot key. Oversized buckets are
+    * DOWN-SAMPLED to `cap` members BEFORE pairing, ordered by a
+    * per-band deterministic hash — so join work is bounded at cap² per
+    * bucket, and because each band keeps a *different* subset, members
+    * of a hot exact-dup cluster (where every band bucket is oversized)
+    * still surface in some band's kept set with probability
+    * ≈ 1 − (1 − cap/n)^bands. Recall on such clusters is reduced, not
+    * preserved: with n ≫ cap·bands some members pair with nothing and
+    * the cluster can fragment; downstream connected-components re-links
+    * what does pair. None = exact banding (the oracle-parity default).
+    *
+    * `hasher`: band-key and down-sample-rank hash over a pre-concatenated
+    * string. Production default is codegen'd 8-byte xxhash64; oracle-
+    * parity queries pass md5 so DuckDB can replay the identical banding
+    * and down-sampling. */
   def candidatePairs(
       df: DataFrame,
       idField: String,
@@ -225,7 +228,7 @@ object MinHashLSH {
     // sigLen is caller-known (== numHashes of the signature step); taking
     // it as a parameter avoids a whole Spark job just to probe one row
     val rowsPerBand = sigLen / bands
-    val bandedAll = df
+    val banded = df
       .select(
         col(idField).as("__graft_id"),
         posexplode(
@@ -237,47 +240,11 @@ object MinHashLSH {
           )
         ).as(Seq("band", "bh"))
       )
-    maxBucketSize match {
-      case Some(cap) =>
-        // POSTINGS shape (r14, the PrefixFilterJoin/FingerprintOverlap
-        // discipline applied to the banding cap): ONE groupBy on the
-        // bucket key keeps the `cap` members ranked first by (salted
-        // hash, id) through a BOUNDED heap
-        // ([[graft.functions.functions.collect_min_k]] — ascending
-        // (h, id), exactly the order the row_number window used) and
-        // emits each bucket's ≤ cap·(cap−1)/2 pairs in-row via
-        // pair_combos. Replaces the window shuffle + sort, the persist/
-        // count materialization job, and the self-join's two exchanges
-        // with a single exchange — pair set identical (parity-spec'd) —
-        // and a degenerate hot bucket folds to ≤ cap rows per map
-        // partition instead of sorting its full membership.
-        bandedAll
-          .select(col("band"), col("bh"),
-            struct(
-              hasher(concat_ws("|", col("__graft_id"), col("band"))).as("h"),
-              col("__graft_id").as("id")).as("__graft_r"))
-          .groupBy(col("band"), col("bh"))
-          .agg(graft.functions.functions.collect_min_k(col("__graft_r"), cap)
-            .as("__graft_kept"))
-          .select(explode(graft.functions.functions.pair_combos(
-            transform(col("__graft_kept"), r => r.getField("id"))))
-            .as("__graft_p"))
-          .select(col("__graft_p").getField("id_a").as("id_a"),
-            col("__graft_p").getField("id_b").as("id_b"))
-          .distinct()
-      case None =>
-        val banded = bandedAll.persist()
-        banded.count() // materialize once; both self-join legs read the cache
-        val a = banded.as("a")
-        val b = banded.as("b")
-        a.join(
-            b,
-            col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-              col("a.__graft_id") < col("b.__graft_id")
-          )
-          .select(col("a.__graft_id").as("id_a"), col("b.__graft_id").as("id_b"))
-          .distinct()
-    }
+    // the cap's rank is salted with the band, so each band keeps a
+    // different subset of a hot cluster
+    Postings.pairs(banded, Seq(col("band"), col("bh")), col("__graft_id"),
+      Postings.keepFirst(maxBucketSize,
+        hasher(concat_ws("|", col("__graft_id"), col("band"))))).distinct()
   }
 
   /** Containment pairing — Broder 1997 distinguishes RESEMBLANCE
@@ -292,10 +259,11 @@ object MinHashLSH {
     * (hot boilerplate shingles are excluded by the cap, which also
     * bounds every block's join work at maxShingleDf²).
     *
-    * Scale shape: shingle df table is one partial-agg groupBy on
-    * xxhash64(shingle); the block join shuffles (hash, id) pairs;
-    * exact verification joins shingle sets back for candidate ids only
-    * (same discipline as [[dedup]]'s verify). The containment score is
+    * Scale shape: candidates are the [[Postings.DropOver]] shape on
+    * xxhash64(shingle) — one partial-agg groupBy whose bounded heap holds
+    * at most maxShingleDf+1 ids per shingle; exact verification joins
+    * shingle sets back for candidate ids only (same discipline as
+    * [[dedup]]'s verify). The containment score is
     * a scaled integral division, engine-replayable. */
   def containmentPairs(
       df: DataFrame,
@@ -317,36 +285,12 @@ object MinHashLSH {
         .as("__ct_sh"))
       .persist()
     shingled.count()
-    val exploded = shingled
-      .select(col("__ct_id"), explode(col("__ct_sh")).as("__ct_s"))
-      .withColumn("__ct_h", xxhash64(col("__ct_s")))
-      .drop("__ct_s")
-    // POSTINGS shape (r13): the df-count filter and the block self-join
-    // collapse into ONE groupBy — a posting (shingle-hash) with 2 ≤
-    // members ≤ maxShingleDf emits its ≤ maxShingleDf·(maxShingleDf−1)/2
-    // candidate pairs in-row. Previous formulation paid a count agg, a
-    // blocking join, and a self-join (3 further exchanges of posting
-    // rows); the candidate set is identical. r14: the unbounded
-    // collect_list (a hot boilerplate shingle shared by millions of
-    // docs would buffer ALL its ids in one task before the size filter
-    // discarded them) becomes a BOUNDED collect of at most
-    // maxShingleDf+1 ids ([[graft.functions.functions.collect_min_k]]):
-    // a posting with ≤ maxShingleDf members keeps its FULL id set
-    // (sorted — pair_combos' least/greatest orientation + distinct make
-    // the pair set order-independent), and reaching maxShingleDf+1
-    // elements IS the overflow flag the size filter rejects, exactly as
-    // it rejected the full list.
-    val cand = exploded
-      .groupBy(col("__ct_h"))
-      .agg(graft.functions.functions
-        .collect_min_k(col("__ct_id"), maxShingleDf.toInt + 1).as("__ct_ids"))
-      .filter(size(col("__ct_ids")) >= 2 &&
-        size(col("__ct_ids")) <= maxShingleDf.toInt)
-      .select(explode(graft.functions.functions.pair_combos(col("__ct_ids")))
-        .as("__ct_p"))
-      .select(col("__ct_p").getField("id_a").as("id_a"),
-        col("__ct_p").getField("id_b").as("id_b"))
-      .distinct()
+    // a posting (shingle hash) with more than maxShingleDf members is a
+    // hot boilerplate shingle and blocks nothing
+    val cand = Postings.pairs(
+      shingled.select(col("__ct_id"), explode(col("__ct_sh")).as("__ct_s")),
+      Seq(xxhash64(col("__ct_s"))), col("__ct_id"),
+      Postings.DropOver(maxShingleDf.toInt)).distinct()
     val out = cand
       .join(shingled.select(col("__ct_id").as("id_a"),
         col("__ct_sh").as("sh_a")), Seq("id_a"))
@@ -373,6 +317,37 @@ object MinHashLSH {
     ckpt
   }
 
+  /** The verify stage [[dedup]] and [[dedupClusters]] share: banded
+    * candidates joined back to their shingle sets, kept when the exact
+    * Jaccard reaches `minJaccard`. Returns (id_a, id_b). */
+  private def verifiedPairs(
+      df: DataFrame,
+      wordsField: String,
+      idField: String,
+      shingleSize: Int,
+      numHashes: Int,
+      bands: Int,
+      minJaccard: Double
+  ): DataFrame = {
+    val withSig = MinHashSignature(wordsField, shingleSize, numHashes)(df)
+    val pairs = candidatePairs(withSig, idField, "minhash_sig", bands, numHashes)
+    val shingled = df.select(
+      col(idField).as("__id"),
+      array_distinct(TextShingles.shingles(col(wordsField), shingleSize)).as("__sh")
+    )
+    pairs
+      .join(shingled.withColumnRenamed("__id", "id_a")
+        .withColumnRenamed("__sh", "sh_a"), Seq("id_a"))
+      .join(shingled.withColumnRenamed("__id", "id_b")
+        .withColumnRenamed("__sh", "sh_b"), Seq("id_b"))
+      .withColumn("inter",
+        graft.functions.functions.intersect_size(col("sh_a"), col("sh_b")).cast(DoubleType))
+      .withColumn("jac",
+        col("inter") / (size(col("sh_a")) + size(col("sh_b")) - col("inter")))
+      .filter(col("jac") >= minJaccard)
+      .select("id_a", "id_b")
+  }
+
   /** Full near-dedup: signature → banding → connected-via-pairs removal
     * (keep the smallest id of each candidate pair's right side removed).
     * Single-linkage transitive closure is deliberately NOT computed
@@ -388,30 +363,8 @@ object MinHashLSH {
       bands: Int = 4,
       minJaccard: Double = 0.8
   ): DataFrame = {
-    val withSig =
-      MinHashSignature(wordsField, shingleSize, numHashes)(df)
-    val pairs = candidatePairs(withSig, idField, "minhash_sig", bands, numHashes)
-    val shingled = df.select(
-      col(idField).as("__id"),
-      array_distinct(TextShingles.shingles(col(wordsField), shingleSize))
-        .as("__sh")
-    )
-    val verified = pairs
-      .join(shingled.withColumnRenamed("__id", "id_a")
-        .withColumnRenamed("__sh", "sh_a"), Seq("id_a"))
-      .join(shingled.withColumnRenamed("__id", "id_b")
-        .withColumnRenamed("__sh", "sh_b"), Seq("id_b"))
-      .withColumn(
-        "inter",
-        graft.functions.functions.intersect_size(col("sh_a"), col("sh_b")).cast(DoubleType)
-      )
-      .withColumn(
-        "jac",
-        col("inter") /
-          (size(col("sh_a")) + size(col("sh_b")) - col("inter"))
-      )
-      .filter(col("jac") >= minJaccard)
-    val toDrop = verified.select(col("id_b").as(idField)).distinct()
+    val toDrop = verifiedPairs(df, wordsField, idField, shingleSize,
+      numHashes, bands, minJaccard).select(col("id_b").as(idField)).distinct()
     df.join(toDrop, Seq(idField), "left_anti")
   }
 
@@ -429,23 +382,8 @@ object MinHashLSH {
       minJaccard: Double = 0.8,
       maxIter: Int = 20
   ): DataFrame = {
-    val withSig = MinHashSignature(wordsField, shingleSize, numHashes)(df)
-    val pairs = candidatePairs(withSig, idField, "minhash_sig", bands, numHashes)
-    val shingled = df.select(
-      col(idField).as("__id"),
-      array_distinct(TextShingles.shingles(col(wordsField), shingleSize)).as("__sh")
-    )
-    val verified = pairs
-      .join(shingled.withColumnRenamed("__id", "id_a")
-        .withColumnRenamed("__sh", "sh_a"), Seq("id_a"))
-      .join(shingled.withColumnRenamed("__id", "id_b")
-        .withColumnRenamed("__sh", "sh_b"), Seq("id_b"))
-      .withColumn("inter",
-        graft.functions.functions.intersect_size(col("sh_a"), col("sh_b")).cast(DoubleType))
-      .withColumn("jac",
-        col("inter") / (size(col("sh_a")) + size(col("sh_b")) - col("inter")))
-      .filter(col("jac") >= minJaccard)
-      .select("id_a", "id_b")
+    val verified = verifiedPairs(df, wordsField, idField, shingleSize,
+      numHashes, bands, minJaccard)
     val comps = ConnectedComponents.components(verified, maxIter = maxIter)
     // drop every clustered row that is not its cluster's minimum
     val losers = comps.filter(col("id") =!= col("comp"))
@@ -863,10 +801,11 @@ object BbitMinHash {
   * probability — unlike minhash banding).
   *
   * Scale shape: linear band explode (`bands` rows/doc, each an 8-byte
-  * chunk key), shuffle keyed on (band, chunk), join work bounded per
-  * bucket — with the same deterministic hot-bucket down-sample as
+  * chunk key), then the [[Postings]] candidate shape on (band, chunk) —
+  * with the same deterministic hot-bucket down-sample as
   * [[MinHashLSH.candidatePairs]] for degenerate chunks (all-zero
-  * simhashes of empty docs). 64-bit hashes with 16-bit chunks give
+  * simhashes of empty docs). Each member carries its simhash, so the
+  * verify needs no join back. 64-bit hashes with 16-bit chunks give
   * 65k buckets per band; the verify is one codegen'd popcount. */
 object SimHashNearDup {
 
@@ -899,38 +838,14 @@ object SimHashNearDup {
             .bitwiseAND(lit(mask))): _*)
       ).as(Seq("__sh_band", "__sh_chunk"))
     )
-    val kept = (maxBucketSize match {
-      case Some(cap) =>
-        banded
-          .withColumn(
-            "__sh_rn",
-            row_number().over(
-              Window.partitionBy(col("__sh_band"), col("__sh_chunk"))
-                .orderBy(
-                  hasher(concat_ws("|", col("__sh_id"), col("__sh_band"),
-                    col("__sh_chunk"))),
-                  col("__sh_id")))
-          )
-          .filter(col("__sh_rn") <= cap)
-          .drop("__sh_rn")
-      case None => banded
-    }).persist()
-    // r13: materialize once — the upstream simhash expression (per-word
-    // hash + bit fold) is the expensive part, and without the persist
-    // BOTH self-join legs recompute it (the MinHashLSH.candidatePairs
-    // discipline applied here, including leaving the cache to the
-    // session: a checkpoint would truncate the plan callers audit)
-    kept.count()
-    kept.as("a")
-      .join(
-        kept.as("b"),
-        col("a.__sh_band") === col("b.__sh_band") &&
-          col("a.__sh_chunk") === col("b.__sh_chunk") &&
-          col("a.__sh_id") < col("b.__sh_id"))
+    Postings.pairs(banded, Seq(col("__sh_band"), col("__sh_chunk")),
+        struct(col("__sh_id").as("id"), col("__sh_v").as("v")),
+        Postings.keepFirst(maxBucketSize, hasher(concat_ws("|", col("__sh_id"),
+          col("__sh_band"), col("__sh_chunk")))))
       .select(
-        col("a.__sh_id").as("id_a"),
-        col("b.__sh_id").as("id_b"),
-        bit_count(col("a.__sh_v").bitwiseXOR(col("b.__sh_v")))
+        col("id_a").getField("id").as("id_a"),
+        col("id_b").getField("id").as("id_b"),
+        bit_count(col("id_a").getField("v").bitwiseXOR(col("id_b").getField("v")))
           .cast(LongType).as("hamming")
       )
       .filter(col("hamming") <= maxHamming)
@@ -950,10 +865,10 @@ object SimHashNearDup {
   * [[CosineKnn.kmeansCentroids]] or pick deterministic rows) collects to
   * the driver and inlines as literals, so assignment is a zero-shuffle
   * codegen'd fold over the corpus. The pairwise stage never leaves a
-  * cluster — an equi-join on the cluster id, with the standard
-  * deterministic `maxClusterCompare` down-sample for oversized clusters —
-  * and its output feeds [[ConnectedComponents]] (edge-proportional, not
-  * corpus-proportional). Similarity thresholds compare floor-scaled
+  * cluster — the [[Postings]] candidate shape on the cluster id, with the
+  * standard deterministic `maxClusterCompare` down-sample for oversized
+  * clusters — and its output feeds [[ConnectedComponents]]
+  * (edge-proportional, not corpus-proportional). Similarity thresholds compare floor-scaled
   * BIGINTs so the decision replays bit-identically across engines.
   *
   * Returns the corpus plus `cluster` and boolean `keepField`; docs in no
@@ -994,28 +909,14 @@ object SemDeDup {
         floor(col("__best").getField("sim") * 1e6).cast(LongType).as("__sd_csim")
       )
       .persist()
-    val kept = maxClusterCompare match {
-      case Some(cap) =>
-        assigned
-          .withColumn(
-            "__sd_rn",
-            row_number().over(
-              Window.partitionBy(col("cluster"))
-                .orderBy(hasher(concat_ws("|", col("__sd_id"), col("cluster"))),
-                  col("__sd_id")))
-          )
-          .filter(col("__sd_rn") <= cap)
-          .drop("__sd_rn")
-      case None => assigned
-    }
-    val edges = kept.as("a")
-      .join(kept.as("b"),
-        col("a.cluster") === col("b.cluster") &&
-          col("a.__sd_id") < col("b.__sd_id"))
+    val edges = Postings.pairs(assigned, Seq(col("cluster")),
+        struct(col("__sd_id").as("id"), col("__sd_e").as("e")),
+        Postings.keepFirst(maxClusterCompare,
+          hasher(concat_ws("|", col("__sd_id"), col("cluster")))))
       .filter(
-        floor(CosineKnn.cosine(col("a.__sd_e"), col("b.__sd_e")) * 1e6)
+        floor(CosineKnn.cosine(col("id_a").getField("e"), col("id_b").getField("e")) * 1e6)
           .cast(LongType) >= epsScaled)
-      .select(col("a.__sd_id").as("id_a"), col("b.__sd_id").as("id_b"))
+      .select(col("id_a").getField("id").as("id_a"), col("id_b").getField("id").as("id_b"))
     val comps = ConnectedComponents.components(edges)
     // per duplicate group: survive the member FARTHEST from its centroid
     // (lowest scaled sim), ties -> smallest id

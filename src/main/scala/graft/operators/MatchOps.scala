@@ -286,9 +286,9 @@ final case class PhraseReplace(
   * prefixes), and a row-local verify on the two candidate arrays —
   * token arrays shuffle only for candidate pairs.
   *
-  * `maxPrefixDf` is the deterministic hot-postings cap — the
-  * [[MinHashLSH.candidatePairs]] `maxBucketSize` discipline applied to
-  * the inverted index: a prefix token kept by more than `cap` documents
+  * `maxPrefixDf` is the deterministic hot-postings cap
+  * ([[Postings.KeepFirst]], the candidate shape every pair generator
+  * shares): a prefix token kept by more than `cap` documents
   * retains only the `cap` members ranked first by a salted hash (ties
   * by id), bounding every posting list's candidate contribution at
   * cap² and making total candidate work LINEAR in the corpus. The
@@ -301,7 +301,6 @@ final case class PhraseReplace(
   * oracles, the [[Medoid]]/[[DeterministicSample]] portable twin). */
 object PrefixFilterJoin {
   import graft.functions.functions.integral_divide
-  import org.apache.spark.sql.expressions.Window
 
   /** All pairs (id_a < id_b) with set-Jaccard >= minJaccardPpm/1e6:
     * (id_a, id_b, jaccard_ppm). */
@@ -334,43 +333,11 @@ object PrefixFilterJoin {
       .cast("int") + 1
     val prefAll = ordered.select(col("__pf_id"),
       explode(slice(col("toks"), lit(1), p)).as("ptok"))
-    val cand = maxPrefixDf match {
-      case Some(cap) =>
-        // POSTINGS shape (r13): one groupBy on the prefix token builds
-        // each posting list, keeps the `cap` members ranked first by
-        // (salted hash, id), and emits the posting's ≤ cap·(cap−1)/2
-        // pairs IN-ROW via [[graft.functions.functions.pair_combos]].
-        // Replaces the window shuffle + self-join (which re-evaluated
-        // the rank hash and the window once PER JOIN LEG) with a single
-        // exchange; the pair set is identical. The rank hash stays
-        // salted with the token so a hot document is not the one
-        // dropped everywhere. r14: the cap selection is a BOUNDED-HEAP
-        // aggregate ([[graft.functions.functions.collect_min_k]], same
-        // ascending (h, id) order the r13 `array_sort(collect_list)`
-        // slice produced) — a hyper-hot prefix token no longer builds
-        // an unbounded per-key buffer before being capped, and map-side
-        // partial aggregation ships ≤ cap rows per (partition, token).
-        prefAll
-          .select(col("ptok"),
-            struct(
-              hasher(concat_ws("|", col("__pf_id"), col("ptok"))).as("h"),
-              col("__pf_id").as("id")).as("__pf_r"))
-          .groupBy(col("ptok"))
-          .agg(graft.functions.functions.collect_min_k(col("__pf_r"), cap)
-            .as("__pf_kept"))
-          .select(explode(graft.functions.functions.pair_combos(
-            transform(col("__pf_kept"), r => r.getField("id")))).as("__pf_p"))
-          .select(col("__pf_p").getField("id_a").as("id_a"),
-            col("__pf_p").getField("id_b").as("id_b"))
-          .distinct()
-      case None =>
-        val pref = prefAll
-        pref.as("a")
-          .join(pref.as("b"),
-            col("a.ptok") === col("b.ptok") && col("a.__pf_id") < col("b.__pf_id"))
-          .select(col("a.__pf_id").as("id_a"), col("b.__pf_id").as("id_b"))
-          .distinct()
-    }
+    // the cap's rank is salted with the token, so a hot document is not
+    // the one dropped from every posting
+    val cand = Postings.pairs(prefAll, Seq(col("ptok")), col("__pf_id"),
+      Postings.keepFirst(maxPrefixDf,
+        hasher(concat_ws("|", col("__pf_id"), col("ptok"))))).distinct()
     val full = cand
       .join(ordered.select(col("__pf_id").as("id_a"), col("toks").as("__ta")), "id_a")
       .join(ordered.select(col("__pf_id").as("id_b"), col("toks").as("__tb")), "id_b")

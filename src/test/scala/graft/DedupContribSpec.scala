@@ -154,6 +154,16 @@ class DedupContribSpec extends SparkSpec {
     assert(got == brute, s"got=$got brute=$brute")
   }
 
+  test("MinHashLSH.dedup and SimHashNearDup leave no cache entry in the session") {
+    spark.catalog.clearCache()
+    MinHashLSH.dedup(docs, "words", "doc_id").collect()
+    SimHashNearDup.candidatePairs(
+      SimHash("words")(docs).select(col("doc_id").as("id"), col("simhash").as("sh")),
+      "id", "sh").collect()
+    assert(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.isEmpty)
+  }
+
   test("SimHashNearDup rejects a bandless-guarantee config") {
     val df = Seq((1L, 2L)).toDF("id", "sh")
     val e = intercept[IllegalArgumentException](

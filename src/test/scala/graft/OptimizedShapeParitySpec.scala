@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.functions.{pair_combos, pq_adc_dist, pq_encode}
 import graft.operators.ProductQuantizer
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -195,6 +196,113 @@ class OptimizedShapeParitySpec extends SparkSpec {
       .distinct()
     assert(viaPostings.exceptAll(viaWindow).count() === 0)
     assert(viaWindow.exceptAll(viaPostings).count() === 0)
+  }
+
+  private val rankHashers: Seq[(String, Column => Column)] =
+    Seq("md5" -> (c => md5(c)), "xxhash64" -> (c => xxhash64(c)))
+
+  test("capped SimHash postings == row_number window + self-join (200 all-zero simhashes, md5 + xxhash64)") {
+    import graft.operators.SimHashNearDup
+    // 200 all-zero simhashes (empty docs) and 20 one-bit hashes make
+    // every band's zero chunk a hot bucket; 100 random hashes plus
+    // one-bit flips of half of them give near-dup pairs in cold buckets
+    val rows = (0L until 200L).map(i => (i, 0L)) ++
+      (200L until 300L).map(i => (i, det(i, 71))) ++
+      (300L until 350L).map(i => (i, det(i - 100, 71) ^ (1L << (i % 64)))) ++
+      (350L until 370L).map(i => (i, 1L << (i % 64)))
+    val hs = rows.toDF("id", "sh")
+    val cap = 5
+    for ((name, hasher) <- rankHashers) {
+      val viaPostings = SimHashNearDup.candidatePairs(hs, "id", "sh",
+        maxBucketSize = Some(cap), hasher = hasher)
+      val banded = hs.select(col("id"), col("sh"),
+        posexplode(array((0 until 4).map(b =>
+          shiftrightunsigned(col("sh"), b * 16).bitwiseAND(lit(0xFFFFL))): _*))
+          .as(Seq("band", "chunk")))
+      val kept = banded
+        .withColumn("rn", row_number().over(
+          Window.partitionBy(col("band"), col("chunk"))
+            .orderBy(hasher(concat_ws("|", col("id"), col("band"), col("chunk"))),
+              col("id"))))
+        .filter(col("rn") <= cap)
+      val viaWindow = kept.as("a")
+        .join(kept.as("b"),
+          col("a.band") === col("b.band") && col("a.chunk") === col("b.chunk") &&
+            col("a.id") < col("b.id"))
+        .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
+          bit_count(col("a.sh").bitwiseXOR(col("b.sh"))).cast(LongType).as("hamming"))
+        .filter(col("hamming") <= 3)
+        .distinct()
+      // the cap bites: the hot zero chunks pair at most cap members each
+      assert(viaWindow.filter(col("id_b") < 200L).count() <= 4 * cap * (cap - 1) / 2, name)
+      assert(viaWindow.filter(col("id_a") >= 200L).count() > 0, name)
+      assert(viaPostings.exceptAll(viaWindow).count() === 0, name)
+      assert(viaWindow.exceptAll(viaPostings).count() === 0, name)
+    }
+  }
+
+  /** SemDeDup.dedup as it was written with a row_number window cap and
+    * a self-join on the cluster id — the reference for the capped case. */
+  private def semDeDupViaWindow(
+      corpus: DataFrame,
+      cents: Seq[Seq[Double]],
+      cids: Seq[Long],
+      eps: Double,
+      cap: Int,
+      hasher: Column => Column
+  ): DataFrame = {
+    import graft.functions.functions.argmax_cosine
+    import graft.operators.{ConnectedComponents, CosineKnn}
+    val assigned = corpus
+      .select(col("id").as("sid"), col("emb").cast(ArrayType(DoubleType)).as("e"))
+      .withColumn("best", argmax_cosine(col("e"), cents))
+      .select(col("sid"), col("e"),
+        element_at(typedLit(cids), col("best").getField("idx") + 1).as("cluster"),
+        floor(col("best").getField("sim") * 1e6).cast(LongType).as("csim"))
+    val kept = assigned
+      .withColumn("rn", row_number().over(Window.partitionBy(col("cluster"))
+        .orderBy(hasher(concat_ws("|", col("sid"), col("cluster"))), col("sid"))))
+      .filter(col("rn") <= cap)
+    val edges = kept.as("a")
+      .join(kept.as("b"),
+        col("a.cluster") === col("b.cluster") && col("a.sid") < col("b.sid"))
+      .filter(floor(CosineKnn.cosine(col("a.e"), col("b.e")) * 1e6).cast(LongType) >=
+        math.round(eps * 1e6))
+      .select(col("a.sid").as("id_a"), col("b.sid").as("id_b"))
+    val comps = ConnectedComponents.components(edges)
+    val survivors = comps
+      .join(assigned.select(col("sid").as("id"), col("csim")), Seq("id"))
+      .groupBy(col("comp"))
+      .agg(min(struct(col("csim"), col("id"))).as("w"))
+      .select(col("w").getField("id").as("sid"), lit(true).as("surv"))
+    assigned
+      .join(comps.withColumnRenamed("id", "sid"), Seq("sid"), "left")
+      .join(survivors, Seq("sid"), "left")
+      .select(col("sid").as("id"), col("cluster"),
+        (col("comp").isNull || coalesce(col("surv"), lit(false))).as("semdedup_keep"))
+  }
+
+  test("capped SemDeDup cluster == row_number window + self-join (one giant cluster, md5 + xxhash64)") {
+    import graft.operators.SemDeDup
+    // one centroid: all 150 docs form ONE cluster, far over the cap; 10
+    // prototypes with per-doc jitter make duplicate groups, so which
+    // members the cap keeps decides the verdicts
+    val corpus = (0L until 150L).map { i =>
+      (i, (0 until 4).map(d =>
+        math.sin((i % 10) * 7.0 + d) + 1e-4 * (det(i * 4 + d, 5) % 100).toDouble))
+    }.toDF("id", "emb")
+    val cent = Seq(1.0, 1.0, 1.0, 1.0)
+    val cents = Seq((7L, cent)).toDF("cid", "ce")
+    val (cap, eps) = (20, 0.999)
+    for ((name, hasher) <- rankHashers) {
+      val viaPostings = SemDeDup.dedup(corpus, "emb", "id", cents, eps,
+        maxClusterCompare = Some(cap), hasher = hasher)
+        .select("id", "cluster", "semdedup_keep")
+      val viaWindow = semDeDupViaWindow(corpus, Seq(cent), Seq(7L), eps, cap, hasher)
+      assert(viaWindow.filter(!col("semdedup_keep")).count() > 0, name)
+      assert(viaPostings.exceptAll(viaWindow).count() === 0, name)
+      assert(viaWindow.exceptAll(viaPostings).count() === 0, name)
+    }
   }
 
   test("word_shingles matches the TextShingles HOF (null array, null words, short, unicode)") {

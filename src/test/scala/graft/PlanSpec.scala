@@ -268,6 +268,53 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("cluster"), plan)
   }
 
+  test("capped candidate generators: no Window, no Cartesian product in any executed plan") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // three of the six checkpoint their output, so the plans that ran are
+    // read from a listener rather than from the returned DataFrames
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val docs = (0L until 60L)
+        .map(i => (i, s"alpha beta gamma block ${i % 6} tail ${i % 4} end"))
+        .toDF("id", "text")
+        .withColumn("words", split(col("text"), " "))
+      MinHashLSH.candidatePairs(MinHashSignature("words", 3, 8)(docs), "id",
+        bands = 4, sigLen = 8, maxBucketSize = Some(3)).collect()
+      MinHashLSH.containmentPairs(docs, "words", "id", shingleSize = 2,
+        maxShingleDf = 4L).collect()
+      PrefixFilterJoin.pairs(docs.withColumn("sh", TextShingles.shingles(col("words"), 2)),
+        "id", "sh", 300000L, maxPrefixDf = Some(3)).collect()
+      FingerprintOverlap.candidatePairs(docs.select(col("id"), array_distinct(col("words")).as("fps")),
+        "id", "fps", minShared = 1, maxBucketSize = Some(3)).collect()
+      SimHashNearDup.candidatePairs(docs.select(col("id"), (pmod(col("id"), lit(3L)) * 0x10001L).as("sh")),
+        "id", "sh", maxBucketSize = Some(3)).collect()
+      val emb = (0L until 60L).map(i => (i, (0 until 4).map(d => math.sin(i % 5 * 7 + d))))
+        .toDF("vec_id", "e")
+      val cents = Seq((0L, Seq(1.0, 1.0, 1.0, 1.0))).toDF("cid", "ce")
+      SemDeDup.dedup(emb, "e", "vec_id", cents, eps = 0.99, maxClusterCompare = Some(3)).collect()
+      // listener events arrive in order: once this marker's plan is in,
+      // every plan above is too
+      spark.range(3).toDF("plan_spec_marker").collect()
+      val deadline = System.nanoTime() + 60000000000L
+      while (!plans.toArray.exists(_.toString.contains("plan_spec_marker")) &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    val all = plans.toArray.map(_.toString).toSeq
+    // one capped postings aggregate per generator
+    assert(all.count(_.contains("collect_top_k")) >= 6, all.mkString("\n\n"))
+    all.foreach { p =>
+      assert(!p.contains("Window"), p)
+      assert(!p.contains("Cartesian"), p)
+    }
+  }
+
   private def pipeOps(ms: graft.Mapper*)(df: org.apache.spark.sql.DataFrame) =
     ms.foldLeft(df)((d, m) => m(d))
 

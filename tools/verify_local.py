@@ -10,6 +10,7 @@ Usage: python3 tools/verify_local.py [sfdir] [--skip-spark] [name ...]
 """
 import json
 import math
+import os
 import subprocess
 import sys
 from pathlib import Path
@@ -28,10 +29,9 @@ TABLES = "region nation customer supplier part orders lineitem events documents 
 
 def run_spark():
     cmd = ["sbt", "-batch", f'runMain graft.Verify {SF} {OUT}']
-    env = {"SPARK_GRAFT_CPUS": "8", "PATH": "/usr/bin:/bin:/usr/local/bin"}
-    import os
     e = dict(os.environ)
-    e.update(env)
+    e.setdefault("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
+    e["PATH"] = "/usr/bin:/bin:/usr/local/bin"
     r = subprocess.run(cmd, capture_output=True, text=True, env=e, cwd="/root/repo")
     if r.returncode != 0:
         print(r.stdout[-4000:])
